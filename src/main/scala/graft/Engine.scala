@@ -126,15 +126,29 @@ object Engine {
     * co-join probes. Caller holds the registration lock; the plain view
     * is restored before returning (analysis is eager, so the returned
     * frame keeps the spread plan while no other query can observe the
-    * swapped view). */
-  private def analyzeWithProbeSpread(spark: SparkSession, dir: String,
-      original: String, analyzeSql: String): DataFrame =
+    * swapped view). If the restore itself fails, the spread view may
+    * still be installed: the session's registration is forgotten, so
+    * the next query re-registers every view, and the restore failure
+    * rides along as suppressed on the analysis failure it must not mask.
+    * `restore` is the fault-injection seam for that path. */
+  private[graft] def analyzeWithProbeSpread(spark: SparkSession, dir: String,
+      original: String, analyzeSql: String)(
+      restore: => Unit = Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
+  ): DataFrame =
     if (!coJoinTexts.contains(original)) spark.sql(analyzeSql)
     else {
       Tables.spread(Tables.lineitem(spark, dir))
         .createOrReplaceTempView("lineitem")
+      var failure: Throwable = null
       try spark.sql(analyzeSql)
-      finally Tables.lineitem(spark, dir).createOrReplaceTempView("lineitem")
+      catch { case t: Throwable => failure = t; throw t }
+      finally {
+        try restore
+        catch { case r: Throwable =>
+          lockFor(spark).dir = null
+          if (failure != null) failure.addSuppressed(r) else throw r
+        }
+      }
     }
 
 
@@ -212,7 +226,7 @@ object Engine {
       case None =>
         r.synchronized {
           ensureRegistered(spark, dir, r)
-          analyzeWithProbeSpread(spark, dir, sql, sql)
+          analyzeWithProbeSpread(spark, dir, sql, sql)()
         }
       case Some((block, body)) =>
         // ANALYZE the CTE body under the lock (cheap plan resolution;
@@ -235,7 +249,7 @@ object Engine {
           // `dir` before registering the view and analyzing the text
           ensureRegistered(spark, dir, r)
           art.createOrReplaceTempView("partsupp")
-          analyzeWithProbeSpread(spark, dir, sql, sql.replace(block, ""))
+          analyzeWithProbeSpread(spark, dir, sql, sql.replace(block, ""))()
         }
     }
   }

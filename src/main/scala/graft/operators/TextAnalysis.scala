@@ -252,6 +252,13 @@ object TextAnalysis {
        |  count(*) AS n_docs, avg(length(text)) AS avg_len
        |FROM documents GROUP BY 1 ORDER BY split""".stripMargin
 
+  /** t07's vocabulary broadcast gate (`spark.graft.tfidf.broadcastVocab`,
+    * default on). Only a case-insensitive "false" turns it off: any other
+    * value ("1", "on", a typo) keeps the default rather than failing t07
+    * at plan time. */
+  private[graft] def broadcastVocab(s: SparkSession): Boolean =
+    !s.conf.getOption("spark.graft.tfidf.broadcastVocab").exists(_.trim.equalsIgnoreCase("false"))
+
   /** t07 — TF-IDF top terms: term frequency per doc × inverse document
     * frequency, top 3 terms per doc. The Spark-shaped version of the
     * classic relevance score: one explode, a per-(doc, word) count, a
@@ -296,10 +303,7 @@ object TextAnalysis {
     // the gate off the join falls back to the planner's choice and tf
     // re-shuffles for the window — slower, never wrong.
     val df = tf.groupBy($"word").agg(count(lit(1)).as("df"))
-    val dfSide =
-      if (s.conf.getOption("spark.graft.tfidf.broadcastVocab")
-            .forall(_.toBoolean)) broadcast(df)
-      else df
+    val dfSide = if (broadcastVocab(s)) broadcast(df) else df
     val w = Window.partitionBy($"doc_id").orderBy($"score".desc, $"word")
     tf.join(dfSide, "word")
       .crossJoin(broadcast(n))

@@ -98,6 +98,43 @@ class EngineSpec extends SparkSpec {
     assert(Engine.executeQuery(s, dirB, operators.TpchCorpus.sql(11)).collect().nonEmpty)
   }
 
+  test("a failed probe-spread restore re-registers the views and masks nothing") {
+    import org.apache.spark.sql.catalyst.plans.logical.Repartition
+    val s = spark.newSession()
+    val hv02 = operators.VariantCorpus.sqlText("hv02_tpch_co")
+    val sql = "SELECT count(*) AS n FROM lineitem"
+    val expect = Engine.executeQuery(s, dirA, sql).collect()(0).getLong(0)
+    def spreadInstalled: Boolean =
+      s.table("lineitem").queryExecution.analyzed.collectFirst { case r: Repartition => r }.nonEmpty
+    def restoreFails: Unit = throw new java.io.IOException("injected restore failure")
+    val r = Engine.lockFor(s)
+
+    // analysis fails, then the restore fails: the analysis error surfaces
+    // with the restore error suppressed on it
+    val e = r.synchronized {
+      intercept[org.apache.spark.sql.AnalysisException] {
+        Engine.analyzeWithProbeSpread(s, dirA, hv02, "SELECT no_such_column FROM lineitem")(restoreFails)
+      }
+    }
+    assert(e.getSuppressed.exists(_.getMessage == "injected restore failure"),
+      "the restore failure must ride along as suppressed")
+    assert(spreadInstalled, "the injected failure left the spread view in place")
+    assert(r.dir == null, "a failed restore must forget the session's registration")
+    assert(Engine.executeQuery(s, dirA, sql).collect()(0).getLong(0) == expect)
+    assert(!spreadInstalled, "the next query must re-register the plain lineitem view")
+
+    // analysis succeeds, the restore fails: the restore error surfaces
+    val io = r.synchronized {
+      intercept[java.io.IOException] {
+        Engine.analyzeWithProbeSpread(s, dirA, hv02, hv02)(restoreFails)
+      }
+    }
+    assert(io.getMessage == "injected restore failure")
+    assert(r.dir == null)
+    assert(Engine.executeQuery(s, dirA, sql).collect()(0).getLong(0) == expect)
+    assert(!spreadInstalled)
+  }
+
   /** The reference's MultiQueryTest shape (`fpdb-calcite/java/main/test/
     * .../MultiQueryTest.java`; `Server.cpp` serves concurrent sessions
     * over one shared segment cache): N threads push a mixed workload
